@@ -257,16 +257,16 @@ def main() -> int:
     # the final line stays compact (timings only, ~1.3 kB) and LAST.
     from stock_etl_pipeline_spark.fingerprints import FP_VERSION
 
-    # No compat block since round 12: the one cross-version comparison it
-    # existed for (r10 v2 → r11 v3) has run; committed historical sidecars
-    # (PLANHASH_r11.json) keep their compat maps as data and round_compare
-    # still consumes them for historical pairs.
+    # v4 (round 15) changed plan normalization only; kernel hashing is the
+    # v3 scheme, so the one-round v3 compat block round_compare reads
+    # (kernel hashes only) is the same kernel map. Drop it next round.
     fingerprints = {
         "metric": "code_fingerprints",
         "sf": sf,
         "fp_version": FP_VERSION,
         "plan_hash": plan_hash,
         "kernel_hash": kernel_hash,
+        "compat": {"fp_version": 3, "kernel_hash": kernel_hash},
     }
     sidecar = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "PLANHASH.json"

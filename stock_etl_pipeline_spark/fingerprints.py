@@ -70,7 +70,10 @@ _PKG = __name__.rsplit(".", 1)[0]  # "stock_etl_pipeline_spark"
 # historical sidecars keep their compat maps as data).
 # 2 = analyzed-plan hashing + module-source-closure kernels (round 10).
 # 3 = per-function source closures (round 11; plan hashing unchanged).
-FP_VERSION = 3
+# 4 = RepartitionByExpression width mask anchored on the node line's last
+#     "], <digits>" (round 15; kernel hashing unchanged, so the v3 compat
+#     kernel map is the v4 one).
+FP_VERSION = 4
 
 # module source hashes memoized per process (files do not change mid-run)
 _SRC_HASH: dict[str, str] = {}
@@ -632,5 +635,9 @@ def plan_fingerprint(df) -> str:
     s = _analyzed_plan_string(df)
     s = re.sub(r"lambda (\w+?)_\d+#", r"lambda \1#", s)
     s = re.sub(r"\b(Repartition) \d+", r"\1 N", s)
-    s = re.sub(r"\b(RepartitionByExpression \[[^\]]*\]), \d+", r"\1, N", s)
+    # greedy to the node line's LAST "], <digits>": a key may itself
+    # contain "]" (``arr#1[0]``)
+    s = re.sub(
+        r"\b(RepartitionByExpression \[.*\]), \d+$", r"\1, N", s, flags=re.M
+    )
     return hashlib.md5(s.encode()).hexdigest()[:12]

@@ -33,6 +33,8 @@ import re
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 # Measured crossover for the Arrow signature kernels (SCALING.md round 6):
 # below it, the shuffle-free Arrow pass wins on fixed cost (1.6x at sf0.1's
@@ -635,14 +637,24 @@ def connected_components(
     thr = _cc_local_threshold() if id_type in ("bigint", "int") else 0
 
     def _finish_local(e: DataFrame) -> DataFrame:
-        import pandas as pd
+        import pyarrow as pa
 
         pdf = e.select("lo", "hi").toPandas()
         ids, labels = _union_find_min_labels(
             pdf["lo"].to_numpy(), pdf["hi"].to_numpy()
         )
-        lab = pairs.sparkSession.createDataFrame(
-            pd.DataFrame({"id": ids, "root": labels}), schema="id long, root long"
+        # An Arrow table, not a pandas frame: pandas input takes the Arrow
+        # path only under spark.sql.execution.arrow.pyspark.enabled, so the
+        # plan would depend on session conf.
+        lab = local_frame(
+            pairs.sparkSession,
+            pa.table(
+                {
+                    "id": pa.array(ids, pa.int64()),
+                    "root": pa.array(labels, pa.int64()),
+                }
+            ),
+            "id long, root long",
         ).select(
             F.col("id").cast(id_type).alias("id"),
             F.col("root").cast(id_type).alias("root"),
@@ -2670,7 +2682,8 @@ def minhash_index_write(
         .write.mode("overwrite")
         .parquet(path)
     )
-    model = spark.createDataFrame(
+    model = local_frame(
+        spark,
         [
             (
                 int(num_hashes), int(bands), float(threshold),
@@ -2691,7 +2704,8 @@ def minhash_index_write(
     stats_p = jvm.org.apache.hadoop.fs.Path(path + "_stats")
     stats_fs = stats_p.getFileSystem(spark._jsc.hadoopConfiguration())
     if stats_fs.exists(stats_p):
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [], "seq long, n_docs long, n_cand long, cand_per_doc double"
         ).coalesce(1).write.mode("overwrite").parquet(path + "_stats")
     return {
@@ -2791,7 +2805,8 @@ def minhash_index_increment(
             seq = spark.read.parquet(path + "_stats").count()
         except Exception:
             seq = 0
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(seq), int(n_new), int(n_cand),
               float(n_cand) / max(1, n_new))],
             "seq long, n_docs long, n_cand long, cand_per_doc double",

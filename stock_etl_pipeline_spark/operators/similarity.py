@@ -31,6 +31,8 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 # --- normalization ----------------------------------------------------------
 
 _DOT_D = "aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, (acc, v) -> acc + v)"
@@ -593,9 +595,10 @@ def _kmeans_exact_fused(
     on 2k rows). Here each iteration is:
 
     - the current model as a broadcast 1-row array of (cid, c_dbl, cc)
-      structs (bounded — O(K·dim) doubles; createDataFrame round-trips
-      IEEE-exactly, the _materialize_model argument). Data, not plan
-      literals, so every iteration reuses the same compiled plan;
+      structs (bounded — O(K·dim) doubles; local_frame's Arrow float64
+      columns round-trip IEEE-exactly, the _materialize_model argument).
+      Data, not plan literals, so every iteration reuses the same compiled
+      plan;
     - per-row argmin as a narrow projection: ``array_min(transform(cents,
       c -> struct(dist, cid)))`` — the SAME ``_DOT_D`` fold, the same
       ``(vv + cc − 2·dot)`` operation order, the same 1e-6 floor quantize,
@@ -633,7 +636,7 @@ def _kmeans_exact_fused(
     )
     schema = "cid int, c_dbl array<double>, cc double"
     if not cur:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     dim = len(cur[0][1])
     data = vecs.select("v_int", "v_dbl", "vv")
     cents_schema = (
@@ -646,8 +649,9 @@ def _kmeans_exact_fused(
         # (round 8) the literal-tree variant recompiled per iteration and
         # lost its whole shuffle saving. As data, every iteration reuses
         # the same compiled plan. Python floats round-trip IEEE-exactly
-        # through createDataFrame (the _materialize_model argument).
-        cents_df = vecs.sparkSession.createDataFrame([(cur,)], cents_schema)
+        # through local_frame's float64 Arrow columns (the
+        # _materialize_model argument).
+        cents_df = local_frame(vecs.sparkSession, [(cur,)], cents_schema)
 
         def _dist(c):
             dot = F.aggregate(
@@ -691,7 +695,7 @@ def _kmeans_exact_fused(
             n = d[0][1]
             c_dbl = [float(d[i][0]) / (MICRO * n) for i in range(dim)]
             cur.append((cid, c_dbl, _py_dot(c_dbl, c_dbl)))
-    return spark.createDataFrame(cur, schema)
+    return local_frame(spark, cur, schema)
 
 
 def _kmeans_exact_arrow(
@@ -795,7 +799,7 @@ def _kmeans_exact_arrow(
                 continue  # empty cells dropped — the jvm inner-join behavior
             c_dbl = [float(x) / (MICRO * n) for x in S_mat[p]]
             cur.append((int(cids[p]), c_dbl, _py_dot(c_dbl, c_dbl)))
-    return spark.createDataFrame(cur, "cid int, c_dbl array<double>, cc double")
+    return local_frame(spark, cur, "cid int, c_dbl array<double>, cc double")
 
 
 # --- two-level (hierarchical) coarse assignment — the large-K scale path ----
@@ -985,10 +989,13 @@ def _assign_block(V, vv, C, cc, hier):
 def _materialize_model(spark, df: DataFrame, cols: list[str]) -> DataFrame:
     """Collect a BOUNDED model relation (centroids / codebooks — O(K·dim)
     doubles by construction) and recreate it as a literal DataFrame, cutting
-    the training DAG out of every downstream plan. Python floats are IEEE
-    doubles, so the round-trip is bit-exact."""
+    the training DAG out of every downstream plan. It lands through
+    :func:`local_frame` as an Arrow ``LocalRelation`` (no Python worker per
+    reading job); Python floats and Arrow float64 are both IEEE doubles,
+    so the round-trip is bit-exact."""
     rows = df.select(*cols).collect()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(r[c] for c in cols) for r in rows], df.select(*cols).schema
     )
 
@@ -1360,7 +1367,8 @@ def _ivf_record_stats(spark, path: str, assigned, centroids, seq: int | None):
             seq = spark.read.parquet(path + "_stats").count() + 1
         except Exception:
             seq = 1
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(
             int(seq), bool(is_baseline), int(n), float(mean_d2),
             float(top) / max(1, n),
@@ -1654,7 +1662,8 @@ def _pq_qwt(spark, qu: DataFrame, cb, *, n_subspaces: int, dsub: int, query_id_c
         for r in q_rows
     ]
     qid_type = dict(qu.dtypes)[query_id_col]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         qwt_data, f"{query_id_col} {qid_type}, q_arr array<array<double>>"
     )
 
@@ -1849,7 +1858,8 @@ def _pq_train_encode_arrow(
         spark, qu, cb, n_subspaces=n_subspaces, dsub=dsub,
         query_id_col=query_id_col,
     )
-    cq_sel = spark.createDataFrame(
+    cq_sel = local_frame(
+        spark,
         list(zip(cids, cq_dbl)), "cid int, cq_dbl array<double>"
     )
     return cq_sel, qwt, enc
@@ -1927,9 +1937,9 @@ def _pq_train_encode_fused_jvm(
     def _model_df(cb_cur):
         # Model as broadcast DATA (one row), not plan literals: every
         # iteration and the encode pass reuse the same compiled plan
-        # (the _kmeans_exact_fused argument; createDataFrame round-trips
+        # (the _kmeans_exact_fused argument; local_frame round-trips
         # doubles IEEE-exactly).
-        return spark.createDataFrame([(cents_data, cb_cur)], model_schema)
+        return local_frame(spark, [(cents_data, cb_cur)], model_schema)
 
     def _coded(df: DataFrame, cb_cur, keep: list[str]) -> DataFrame:
         """Narrow coarse-assign + residual + per-subspace code argmin over
@@ -2071,7 +2081,8 @@ def _pq_train_encode_fused_jvm(
     # Driver-built ADC tables (the legacy cwt relation, as a literal):
     # t_arr[m][c] = 2⟨cq_m, w_{m,c}⟩ + ww — single IEEE ops on exact
     # inputs, the legacy tv expression's operation order.
-    cwt = spark.createDataFrame(
+    cwt = local_frame(
+        spark,
         [
             (
                 cid,
@@ -2113,7 +2124,8 @@ def _pq_train_encode_fused_jvm(
         spark, qu, cb, n_subspaces=n_subspaces, dsub=dsub,
         query_id_col=query_id_col,
     )
-    cq_sel = spark.createDataFrame(
+    cq_sel = local_frame(
+        spark,
         list(zip(cids, cq_dbl)), "cid int, cq_dbl array<double>"
     )
     return cq_sel, qwt, enc

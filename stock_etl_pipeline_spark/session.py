@@ -9,13 +9,18 @@ the same code lands well on a multi-executor cluster:
 - Arrow enabled for the few pandas-UDF paths (similarity / multimodal).
 - Shuffle partitions sized to cores locally; on a real cluster AQE's
   coalescing makes the initial number mostly a ceiling.
+
+Driver-built rows (extracts, k-means centroids, codebooks, small sidecar
+records) enter Spark only through :func:`local_frame`, which lands them as
+an Arrow ``LocalRelation`` instead of a pickled PythonRDD.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 
 def default_parallelism() -> int:
@@ -88,3 +93,82 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # static conf on some builds; the persist paths still work
     return spark
+
+
+_DATETIME = (T.DateType, T.TimestampType, T.TimestampNTZType)
+
+
+def _has_datetime(dt: T.DataType) -> bool:
+    if isinstance(dt, _DATETIME):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _has_datetime(dt.elementType)
+    if isinstance(dt, T.MapType):
+        return _has_datetime(dt.keyType) or _has_datetime(dt.valueType)
+    if isinstance(dt, T.StructType):
+        return any(_has_datetime(f.dataType) for f in dt.fields)
+    return False
+
+
+def _arrow_column(values, dt: T.DataType):
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    # Dates and timestamps arrive as StructType.toInternal's integers (days;
+    # microseconds since the epoch, already resolved against the process
+    # time zone for naive datetimes) and are only re-labelled here, so no
+    # time-zone arithmetic happens twice.
+    if isinstance(dt, T.DateType):
+        return pa.array(values, pa.int32()).cast(pa.date32())
+    if isinstance(dt, T.TimestampType):
+        return pa.array(values, pa.int64()).cast(pa.timestamp("us", tz="UTC"))
+    if isinstance(dt, T.TimestampNTZType):
+        return pa.array(values, pa.int64()).cast(pa.timestamp("us"))
+    return pa.array(values, to_arrow_type(dt))
+
+
+def local_frame(spark: SparkSession, rows, schema: T.StructType | str) -> DataFrame:
+    """The one way driver-side rows become a DataFrame.
+
+    ``spark.createDataFrame(list, schema)`` lands as a pickled PythonRDD
+    (an opaque ``LogicalRDD``): every job that reads it starts Python
+    workers just to re-pickle the rows. Here the rows run the same
+    verify → convert → ``StructType.toInternal`` steps as
+    ``SparkSession._create_dataframe`` (so type and NULL errors are the
+    same exceptions), are packed into a ``pyarrow.Table`` and handed to
+    Spark's Arrow path, which plans a JVM ``LocalRelation`` (below
+    ``spark.sql.execution.arrow.localRelationThreshold``; an Arrow-batch
+    JVM RDD above it). Neither needs a Python worker.
+
+    ``rows`` is a list of tuples / dicts / Rows, or a ``pyarrow.Table``
+    already in the schema's column order (passed through unverified).
+    ``schema`` is a StructType or a DDL string. Dates and timestamps are
+    supported as top-level columns only; a schema nesting them inside an
+    array, map or struct is refused.
+    """
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    if not isinstance(schema, T.StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    for f in schema.fields:
+        if not isinstance(f.dataType, _DATETIME) and _has_datetime(f.dataType):
+            raise TypeError(
+                f"local_frame: field {f.name!r} ({f.dataType.simpleString()}) "
+                "nests a date/timestamp type; only top-level date/timestamp "
+                "columns are supported"
+            )
+    if not isinstance(rows, pa.Table):
+        rows = list(rows)
+        verify = T._make_type_verifier(schema)
+        for row in rows:
+            verify(row)
+        convert = T._create_converter(schema)
+        internal = [schema.toInternal(convert(row)) for row in rows]
+        columns = list(zip(*internal)) or [()] * len(schema.fields)
+        rows = pa.Table.from_arrays(
+            [_arrow_column(c, f.dataType) for c, f in zip(columns, schema.fields)],
+            names=schema.names,
+        )
+    return spark.createDataFrame(rows, schema)

@@ -117,6 +117,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..session import local_frame
+
 
 class CommitConflict(Exception):
     """Another committer published the ordinal this commit targeted.
@@ -444,7 +446,7 @@ def _read_manifest_files(
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     use = sorted(manifest["files"]) if names is None else sorted(names)
     if not use:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     ddir = _data_dir(table)
     return spark.read.schema(schema).parquet(*[f"{ddir}/{n}" for n in use])
 

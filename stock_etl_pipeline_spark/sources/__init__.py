@@ -5,10 +5,11 @@ Design: API fetching is inherently driver-side at reference scale (a handful
 of symbols, rate-limited HTTP — reference dags/utils/extractors.py:13-144);
 the fetch callable is injected so tests mock it exactly like the reference's
 unit tests (tests/extractors.py:51-65,88-96). The Spark boundary is
-``spark.createDataFrame(rows, RAW_SCHEMA)`` — explicit schema, never
-inferred (SURVEY.md §1.4). At real scale the same canonicalization functions
-feed a ``foreachPartition`` fetcher or a custom DataSource; the per-source
-row shape stays identical.
+``session.local_frame(spark, rows, RAW_SCHEMA)`` — explicit schema, never
+inferred (SURVEY.md §1.4), landed as an Arrow ``LocalRelation`` so no job
+that reads an extract starts a Python worker. At real scale the same
+canonicalization functions feed a ``foreachPartition`` fetcher or a custom
+DataSource; the per-source row shape stays identical.
 
 File scans (S3-S5) are thin wrappers that force an explicit schema, because
 ``inferSchema`` costs an extra full read and type drift breaks parity.
@@ -24,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ..schemas import RAW_SCHEMA
+from ..session import local_frame
 
 # Alpha Vantage raw column names → canonical (reference dags/utils/extractors.py:43-50).
 ALPHA_VANTAGE_RENAMES = {
@@ -101,7 +103,7 @@ def extract_alpha_vantage(
         for date_key, rec in payload.items():
             canon = {ALPHA_VANTAGE_RENAMES.get(k, k): v for k, v in rec.items()}
             rows.append(_raw_row(date_key, symbol, canon, "alpha_vantage", stamp))
-    return spark.createDataFrame(rows, RAW_SCHEMA)
+    return local_frame(spark, rows, RAW_SCHEMA)
 
 
 def extract_yahoo_finance(
@@ -130,7 +132,7 @@ def extract_yahoo_finance(
         for rec in records:
             canon = {YAHOO_RENAMES.get(k, k): v for k, v in rec.items()}
             rows.append(_raw_row(canon["date"], symbol, canon, "yahoo_finance", stamp))
-    return spark.createDataFrame(rows, RAW_SCHEMA)
+    return local_frame(spark, rows, RAW_SCHEMA)
 
 
 def from_records(
@@ -140,15 +142,17 @@ def from_records(
 ) -> DataFrame:
     """S6 (reference plugins/custom_operators/api_gcs.py:13-118): arbitrary
     fetch → DataFrame, coercing dict / list-of-dicts like the reference's
-    operator (:68-79). Explicit schema recommended; without one Spark infers
-    from the driver-side records (fine for small control-plane fetches)."""
+    operator (:68-79). Explicit schema recommended: the records then go
+    through :func:`local_frame`. Without one this is the one place that
+    keeps Spark's schema inference over driver-side records (fine for small
+    control-plane fetches), and the frame stays a pickled PythonRDD."""
     data = fetch_callable()
     if isinstance(data, dict):
         data = [data]
     if not isinstance(data, list):
         raise TypeError(f"fetch_callable must return dict or list, got {type(data)}")
     if schema is not None:
-        return spark.createDataFrame(data, schema)
+        return local_frame(spark, data, schema)
     return spark.createDataFrame(data)
 
 

@@ -22,6 +22,7 @@ from ..operators.merge import dedup_keep_first
 from ..operators.transform import derive_metrics
 from ..operators.upsert import merge_upsert
 from ..operators.window import daily_close, moving_averages
+from ..session import local_frame
 from . import spec
 
 # Exact daily-close CTE: close_price_u is integer micro-units so window sums
@@ -482,7 +483,7 @@ def q_profile_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     actual = p.select("symbol").distinct()
-    required = spark.createDataFrame([(s,) for s in _REQUIRED_SYMBOLS], "symbol string")
+    required = local_frame(spark, [(s,) for s in _REQUIRED_SYMBOLS], "symbol string")
     cov = (
         required.join(actual, "symbol", "left_anti")
         .agg(

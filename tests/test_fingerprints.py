@@ -376,6 +376,18 @@ def test_plan_fingerprint_partition_width_independent(spark):
     assert r8 != fingerprints.plan_fingerprint(base.repartitionByRange(8, "id"))
 
 
+def test_plan_fingerprint_width_mask_survives_bracket_in_key(spark):
+    """fp_version 4 (ADVICE r14 low): a repartition key whose plan text
+    contains ``]`` (``arr#1[0]``) stopped the old bracket-free key class
+    before the width literal, leaving the width unmasked."""
+    base = spark.range(100).selectExpr("array(id % 7, id) AS arr", "id")
+    h8 = fingerprints.plan_fingerprint(base.repartition(8, base.arr[0]))
+    h32 = fingerprints.plan_fingerprint(base.repartition(32, base.arr[0]))
+    assert h8 == h32
+    assert h8 != fingerprints.plan_fingerprint(base.repartition(8, base.arr[1]))
+    assert h8 != fingerprints.plan_fingerprint(base.repartition(8, "id"))
+
+
 def test_table_row_count_refuses_remote_schemes(tmp_path):
     """VERDICT r13 item 2: ``datasets.table_row_count`` must refuse
     non-local schemes up front (parity with ``_total_row_groups``) —
